@@ -57,9 +57,9 @@ object StageProfile {
         names.put(sc.stageInfo.stageId, sc.stageInfo.name.take(60))
     })
     // optional repeat count (3rd arg): re-run the query N times in the
-    // SAME JVM and print each run's wall — splits cold-JVM bring-up from
-    // per-execution cost (codegen cache hits, CacheRegistry reuse), the
-    // distinction Bench's min-of-2 measures
+    // SAME JVM and print each run's wall and cpu. Every repeat starts from
+    // an empty CacheRegistry, so each one is cold against the registry and
+    // only the first also pays JVM/codegen warm-up.
     val repeats = if (args.length > 2) args(2).toInt else 1
     // SPARK_GRAFT_PHASES=1: per-action Catalyst phase times (analysis /
     // optimization / planning), to attribute driver-side wall in
@@ -75,12 +75,17 @@ object StageProfile {
         override def onFailure(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       })
-    var rows = 0L
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     (1 to repeats).foreach { r =>
-      val t0 = System.nanoTime()
-      rows = SparkEntry.queries(name)(spark, sfDir).count()
+      graft.ops.CacheRegistry.clear(spark)
+      val (t0, c0) = (System.nanoTime(), os.getProcessCpuTime)
+      // a noop write of every column: the same full materialization the
+      // performance gate times (count() lets Catalyst prune the outputs)
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"query=$name run=$r rows=$rows wall=$wall%.2fs")
+      val cpu = (os.getProcessCpuTime - c0) / 1e9
+      println(f"query=$name run=$r wall=$wall%.2fs cpu=$cpu%.2fs")
     }
     Thread.sleep(1500) // listener bus drain
     val tot = stages.values

@@ -7,13 +7,22 @@ import org.apache.spark.storage.StorageLevel
   * creates, so caches are a bounded, releasable resource instead of an
   * unbounded executor-memory leak in long-lived sessions.
   *
-  * Memoization (`cached`) is a legitimate cross-query win — q41/q42/q43
-  * share one shingle explosion, repeat invocations of q41/q65 reuse their
-  * band/code frames — but `persist()` without a release hook pins executor
-  * memory (and the keying map pins SparkSession references) forever.
-  * [[clear]] unpersists and drops everything for a session; `Verify` and
-  * `Bench` call it after their last action, and callers embedding the
-  * library do the same at end-of-life.
+  * The rule for a key: it needs a second reader. That is either another
+  * query in the same session (q41/q42/q43 share one shingle explosion;
+  * q141 and q151 share the dup-span intervals), or a second read inside
+  * one query's own plan (q344's score frame, read twice by each of its
+  * three rank stitches). A frame whose only other reader would be a
+  * replay of the query that built it costs a persist write and storage
+  * memory and saves nothing on a cold run, so it is not cached. Each
+  * cache site names its readers. A key with a single reader stays only
+  * where a cold, fully materialized measurement shows it pays, and its
+  * site gives that figure (q203's rank maps).
+  *
+  * `persist()` without a release hook pins executor memory (and the
+  * keying map pins SparkSession references) forever. [[clear]] unpersists
+  * and drops everything for a session; `Verify` and `Bench` call it after
+  * their last action, and callers embedding the library do the same at
+  * end-of-life.
   *
   * Two bounds keep a long-lived session healthy without any explicit
   * release call:
@@ -24,11 +33,10 @@ import org.apache.spark.storage.StorageLevel
   *    instead of silent eviction + full recompute thrash (`MEMORY_ONLY`'s
   *    failure mode, invisible until the job is mysteriously slow);
   *  - the registry holds at most `graft.cache.maxFrames` frames per
-  *    session (default 64 — the full 140-query bench suite peaks well
-  *    under that); inserting past the cap evicts the least-recently-used
-  *    frames first. Eviction only unpersists — an evicted frame's plan
-  *    recomputes correctly on next use, and a later `cache()` for the same
-  *    key rebuilds and re-registers it.
+  *    session (default 64); inserting past the cap evicts the
+  *    least-recently-used frames first. Eviction only unpersists — an
+  *    evicted frame's plan recomputes correctly on next use, and a later
+  *    `cache()` for the same key rebuilds and re-registers it.
   *
   * Family prefixes in the keys (`textdedup-…`, `q41-…`, `q65-…`) let a
   * suite runner release one operator family eagerly via [[release]] once

@@ -1305,9 +1305,9 @@ object Curation {
         graft.ops.Skew.globalRowNumber(frame,
             Seq(col("sc").desc, col("doc_id").asc), sp, outCol = out)
           .select(col("doc_id"), col(out))
-      // one persisted (doc_id, s1, s2, s3) score frame: each stitch reads
-      // its input twice (boundary sample + bucketed pass), and the fold
-      // aggregates are the expensive part — without the pin the three
+      // one persisted (doc_id, s1, s2, s3) score frame. Its readers are
+      // the three rank stitches of this plan, and each reads it twice
+      // (boundary sample + bucketed pass); without the pin the three
       // ranks re-paid the object aggregates 2x each (measured 5.9 s warm
       // at sf0.1; 2.7 s with it)
       val scores = CacheRegistry.cache(s, s"q344-scores:$dir") {
@@ -1343,17 +1343,9 @@ object Curation {
         q1.join(q2, Seq("doc_id")).join(q3, Seq("doc_id"))
       }
       def sliced(c: String) = scores.select(col("doc_id"), col(c).as("sc"))
-      // the joined rank trio is memoized too (OPTIMIZATION_r17): each
-      // stitch pays two boundary-sample jobs + its bucketed pass per
-      // CALL, and the bench runs every query twice — run 2 re-ran all
-      // three stitches over the already-persisted score frame. In-run
-      // only, released at CacheRegistry.clear.
-      val rankTrio = CacheRegistry.cache(s, s"q344-ranked:$dir") {
-        ranked(sliced("s1"), "r1")
-          .join(ranked(sliced("s2"), "r2"), Seq("doc_id"))
-          .join(ranked(sliced("s3"), "r3"), Seq("doc_id"))
-      }
-      rankTrio
+      ranked(sliced("s1"), "r1")
+        .join(ranked(sliced("s2"), "r2"), Seq("doc_id"))
+        .join(ranked(sliced("s3"), "r3"), Seq("doc_id"))
         .select(col("doc_id"), col("r1"), col("r2"), col("r3"),
           (col("r1") + col("r2") + col("r3")).as("borda"),
           (greatest(col("r1"), col("r2"), col("r3"))

@@ -160,29 +160,22 @@ object LayoutOps {
         .select(col("o_custkey").as("ck"), to_date(col("o_orderdate")).as("od"))
       val bounds = o.agg(min(col("ck")).as("ck_lo"), max(col("ck")).as("ck_hi"),
         min(col("od")).as("od_lo"), max(col("od")).as("od_hi"))
-      // the walked (ck, od, d) index frame is registry-cached
-      // (OPTIMIZATION_r17): the 16-step reflect-and-swap walk is layout
-      // INDEX computation — a real lakehouse computes the curve key once
-      // at write time; the envelope aggregate stays per-run
-      val df = graft.ops.CacheRegistry.cache(s, s"q329-hilbert:$dir") {
-        var acc = o.crossJoin(broadcast(bounds))
-          .select(col("ck"), col("od"),
-            expr(laneSpark("ck", "ck_lo", "ck_hi")).as("x"),
-            expr(laneSpark("CAST(datediff(od, od_lo) AS BIGINT)", "0",
-              "CAST(datediff(od_hi, od_lo) AS BIGINT)")).as("y"),
-            lit(0L).as("d"))
-        HilbertSides.foreach { side =>
-          val (xN, yN, dN) = hilbertStep(side, "x", "y", "d",
-            (a, b) => s"($a ^ $b)")
-          // one select per step: x/y/d advance SIMULTANEOUSLY (each new
-          // value reads the previous step's trio — sequential withColumn
-          // would feed step i's x into step i's own y)
-          acc = acc.select(col("ck"), col("od"),
-            expr(xN).as("x"), expr(yN).as("y"), expr(dN).as("d"))
-        }
-        acc.select(col("ck"), col("od"), col("d"))
+      var acc = o.crossJoin(broadcast(bounds))
+        .select(col("ck"), col("od"),
+          expr(laneSpark("ck", "ck_lo", "ck_hi")).as("x"),
+          expr(laneSpark("CAST(datediff(od, od_lo) AS BIGINT)", "0",
+            "CAST(datediff(od_hi, od_lo) AS BIGINT)")).as("y"),
+          lit(0L).as("d"))
+      HilbertSides.foreach { side =>
+        val (xN, yN, dN) = hilbertStep(side, "x", "y", "d",
+          (a, b) => s"($a ^ $b)")
+        // one select per step: x/y/d advance SIMULTANEOUSLY (each new
+        // value reads the previous step's trio — sequential withColumn
+        // would feed step i's x into step i's own y)
+        acc = acc.select(col("ck"), col("od"),
+          expr(xN).as("x"), expr(yN).as("y"), expr(dN).as("d"))
       }
-      df.groupBy(expr("d >> 26").as("bucket"))
+      acc.groupBy(expr("d >> 26").as("bucket"))
         .agg(count(lit(1)).as("n_rows"),
           min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
           min(col("od")).cast("timestamp").as("min_od"),

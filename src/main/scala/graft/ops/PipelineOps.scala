@@ -386,13 +386,9 @@ object PipelineOps {
         |GROUP BY 1
         |ORDER BY bucket""".stripMargin) { (s, dir) =>
       val base = t(s, dir, "events").select(col("event_id"), col("value"))
-      // the global rank is the histogram INDEX — registry-cached
-      // (OPTIMIZATION_r17); the bucket arithmetic + aggregate stay per-run
-      val ranked = CacheRegistry.cache(s, s"q157-rank:$dir") {
-        graft.ops.Skew.globalRowNumber(base,
-          Seq(col("value").asc, col("event_id").asc),
-          numPartitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
-      }
+      val ranked = graft.ops.Skew.globalRowNumber(base,
+        Seq(col("value").asc, col("event_id").asc),
+        numPartitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
       val tot = base.agg(count(lit(1)).cast("long").as("total"))
       ranked.crossJoin(broadcast(tot))
         .select(expr("((rn - 1) * 10) DIV total").as("bucket"), col("value"))
@@ -804,16 +800,10 @@ object PipelineOps {
             |    i -> concat(words[i], ' ', words[i+1]))
             |ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin)).as("item"))
       val sketch = graft.functions.MisraGries(1024)
-      // the verified candidate-count table is the heavy-hitter INDEX —
-      // registry-cached (OPTIMIZATION_r17): both passes over the bigram
-      // explode (sketch + exact recount) ran twice per bench slot
-      val counted = CacheRegistry.cache(s, s"q167-counts:$dir") {
-        val cands = bg.as[String].select(sketch.toColumn).toDF("cands")
-          .select(explode(col("cands")).as("item"))
-        bg.join(broadcast(cands), Seq("item"))
-          .groupBy(col("item")).agg(count(lit(1)).cast("long").as("cnt"))
-      }
-      counted
+      val cands = bg.as[String].select(sketch.toColumn).toDF("cands")
+        .select(explode(col("cands")).as("item"))
+      bg.join(broadcast(cands), Seq("item"))
+        .groupBy(col("item")).agg(count(lit(1)).cast("long").as("cnt"))
         .orderBy(col("cnt").desc, col("item").asc)
         .limit(25)
     },
@@ -851,8 +841,9 @@ object PipelineOps {
       // (v, Σw) aggregate is map-side combinable, drops the tie-break
       // columns from the sort entirely (2 columns reach the scan instead
       // of 4), and shrinks the stitched frame from |corpus| rows to
-      // |distinct v|. Registry-cached so the tw fold, the stitch's
-      // boundary sample and the bucketed pass share ONE corpus scan.
+      // |distinct v|. Registry-cached because this plan reads it three
+      // times: the tw collect, the stitch's boundary sample and the
+      // bucketed pass then share ONE corpus scan.
       val li = CacheRegistry.cache(s, s"q168-dist:$dir") {
         t(s, dir, "lineitem")
           .groupBy(col("l_extendedprice").as("v"))
@@ -868,15 +859,10 @@ object PipelineOps {
       val tw = if (twRow.isNullAt(0)) 0L else twRow.getLong(0)
       if (tw == 0L) li.select(lit(0L).as("decile"), col("v").as("value")).limit(0)
       else {
-        // the cumulative-weight table is the quantile INDEX — registry-
-        // cached (OPTIMIZATION_r17) so the bench's second run pays only
-        // the ≤9-row threshold probe, not the stitch rebuild
-        val cum = CacheRegistry.cache(s, s"q168-cum:$dir") {
-          graft.ops.Skew.globalRunningSum(li,
-            Seq(col("v").asc),
-            value = col("w"),
-            numPartitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
-        }
+        val cum = graft.ops.Skew.globalRunningSum(li,
+          Seq(col("v").asc),
+          value = col("w"),
+          numPartitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
         // Filter to boundary-crossing rows BEFORE the Generate: the explode
         // used to evaluate the sequence CASE (and allocate an empty array)
         // for every corpus row. The integer predicate keeps ≤9 rows

@@ -801,20 +801,13 @@ object Relational {
         |WHERE rn <= 500
         |ORDER BY rn""".stripMargin) { (s, dir) =>
       val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-      // both stitched rank tables registry-cached (OPTIMIZATION_r17):
-      // each is a ~6-stage boundary-sample + bucketed-prefix chain the
-      // bench's second run re-paid; the zip join + trim stay per-run
-      val a = graft.ops.CacheRegistry.cache(s, s"q219-rank-key:$dir") {
-        graft.ops.Skew.globalRowNumber(
-          t(s, dir, "orders").select(col("o_orderkey")),
-          Seq(col("o_orderkey").asc), parts)
-      }
-      val b = graft.ops.CacheRegistry.cache(s, s"q219-rank-price:$dir") {
-        graft.ops.Skew.globalRowNumber(
-          t(s, dir, "orders")
-            .select(col("o_orderkey").as("price_orderkey"), col("o_totalprice")),
-          Seq(col("o_totalprice").desc, col("price_orderkey").asc), parts)
-      }
+      val a = graft.ops.Skew.globalRowNumber(
+        t(s, dir, "orders").select(col("o_orderkey")),
+        Seq(col("o_orderkey").asc), parts)
+      val b = graft.ops.Skew.globalRowNumber(
+        t(s, dir, "orders")
+          .select(col("o_orderkey").as("price_orderkey"), col("o_totalprice")),
+        Seq(col("o_totalprice").desc, col("price_orderkey").asc), parts)
       a.join(b, Seq("rn"))
         .filter(col("rn") <= 500)
         .select(col("rn"), col("o_orderkey"),

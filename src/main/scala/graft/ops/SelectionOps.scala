@@ -614,12 +614,7 @@ object SelectionOps {
       val cleaned = paragraphCleaned(s, dir)
         .select(col("doc_id"), col("lang"), col("source"),
           col("clean").as("text"))
-      // own memo key (OPTIMIZATION_r17): the cleaned corpus is a
-      // deterministic function of dir, so q320's LM build is memoizable
-      // under a key DISTINCT from the raw-corpus consumers' — the bench
-      // runs every query twice and run 2 re-built the whole cleaned LM
-      perplexityBuckets(cleaned, "src0",
-        memoKey = Some(s"ppl-cleaned:$dir:src0"))
+      perplexityBuckets(cleaned, "src0")
         .groupBy(col("lang"), col("bucket"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum(col("n_pairs") + 1).cast("long").as("n_tokens"))
@@ -1335,22 +1330,10 @@ object SelectionOps {
 
   /** q317's body: [[pplDocScores]] rounded to the oracle's presentation
     * (logprob = round-6 ll, ppl = round-6 exp(−ll/n)) and cut into
-    * per-language terciles via the stitched grouped rank. */
+    * per-language terciles via the stitched grouped rank. `memoKey`
+    * goes to [[pplDocScores]]; the bucketed frame itself is not cached. */
   def perplexityBuckets(docsIn: DataFrame, refSource: String,
-      memoKey: Option[String] = None): DataFrame = memoKey match {
-    // memoize the BUCKETED frame too (OPTIMIZATION_r17): the score memo
-    // alone still re-ran the tercile stitch — two boundary-sample jobs +
-    // the bucketed pass — on every call (the bench runs each query twice,
-    // so q317/q320 paid the stitch twice per bench slot). Same in-run-only
-    // CacheRegistry posture, released at clear.
-    case Some(k) =>
-      CacheRegistry.cache(docsIn.sparkSession, s"$k:buckets")(
-        perplexityBucketsBody(docsIn, refSource, memoKey))
-    case None => perplexityBucketsBody(docsIn, refSource, memoKey)
-  }
-
-  private def perplexityBucketsBody(docsIn: DataFrame, refSource: String,
-      memoKey: Option[String]): DataFrame = {
+      memoKey: Option[String] = None): DataFrame = {
       val s = docsIn.sparkSession
       val agg = pplDocScores(docsIn, refSource, memoKey)
         .select(col("doc_id"), col("lang"), col("n_pairs"),

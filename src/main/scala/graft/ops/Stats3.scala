@@ -764,13 +764,8 @@ object Stats3 {
       val ev = t(s, dir, "events")
         .select(col("event_type"), col("event_id"),
           md5(col("event_id").cast("string")).as("coin"))
-      // the stitched per-class rank is the selection index — registry-
-      // cached (OPTIMIZATION_r17) so the bench's second run pays the
-      // keep-rule + fingerprint aggregates, not the md5-coin rank build
-      val r = CacheRegistry.cache(s, s"q275-rank:$dir") {
-        Skew.groupedRowNumber(ev, Seq("event_type"),
-          Seq(col("coin"), col("event_id")), parts, "rn")
-      }
+      val r = Skew.groupedRowNumber(ev, Seq("event_type"),
+        Seq(col("coin"), col("event_id")), parts, "rn")
       val c = t(s, dir, "events").groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_before"))
       val tgt = c.agg(min(col("n_before")).as("target"))

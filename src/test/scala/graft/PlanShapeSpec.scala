@@ -53,17 +53,9 @@ class PlanShapeSpec extends SparkSpec {
     // tasks regardless of cluster size. The grouped stitch must leave only
     // windows keyed on (bucket, source) — every partitionSpec needs ≥2
     // expressions — and no single-partition exchange anywhere.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    // AdaptiveSparkPlanExec is a LEAF node — collect must unwrap it by hand
-    def windowSpecs(p: SparkPlan): Seq[Seq[Any]] = p.collect {
-      case a: AdaptiveSparkPlanExec => windowSpecs(a.executedPlan)
-      case w: WindowExec => Seq(w.partitionSpec)
-    }.flatten
     Seq("q90_curriculum_interleave", "q91_sequence_packing").foreach { n =>
       val exec = SparkEntry.queries(n)(spark, sf001).queryExecution.executedPlan
-      val specs = windowSpecs(exec)
+      val specs = windows(exec).map(_.partitionSpec)
       assert(specs.nonEmpty, s"$n: expected the stitch window in:\n$exec")
       specs.foreach { spec =>
         assert(spec.size >= 2,
@@ -147,19 +139,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q141: span coalescing windows partition on doc_id, dup join is equi") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.WindowExec
     val exec = SparkEntry.queries("q141_dup_span_coalesce")(spark, sf001)
       .queryExecution.executedPlan
     val p = exec.toString
     assert(!p.contains("CartesianProduct"), s"cartesian in span coalescing:\n$p")
     // every window must be partitioned (by doc_id / doc_id+island) — an
-    // empty partitionSpec would funnel the corpus through one task
-    def windows(sp: SparkPlan): Seq[WindowExec] = sp.collect {
-      case w: WindowExec => Seq(w)
-      case a: AdaptiveSparkPlanExec => windows(a.executedPlan)
-    }.flatten
+    // empty partitionSpec would funnel the corpus through one task. The
+    // windows sit inside the shared q141-intervals cache, which the walker
+    // descends.
     val specs = windows(exec).map(_.partitionSpec)
     assert(specs.nonEmpty, s"no window in the plan:\n$p")
     specs.foreach(s => assert(s.nonEmpty,
@@ -197,15 +184,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q150: both grouped top-k windows are partitioned — no global window") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.WindowExec
     val exec = SparkEntry.queries("q150_group_weighted_sample")(spark, sf001)
       .queryExecution.executedPlan
-    def windows(sp: SparkPlan): Seq[WindowExec] = sp.collect {
-      case w: WindowExec => Seq(w)
-      case a: AdaptiveSparkPlanExec => windows(a.executedPlan)
-    }.flatten
     val specs = windows(exec).map(_.partitionSpec)
     // phase 1 (source, salt) + phase 2 (source) — both must partition
     assert(specs.length >= 2, s"expected both top-k windows:\n$exec")
@@ -237,16 +217,9 @@ class PlanShapeSpec extends SparkSpec {
     // through one task at any corpus size. (SinglePartition text alone is
     // NOT the signal: the 1-row scalar reductions (tie totals, n) end in
     // a legitimate global aggregate — the claim is about WINDOWS.)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    def windowSpecs(p: SparkPlan): Seq[Seq[Any]] = p.collect {
-      case a: AdaptiveSparkPlanExec => windowSpecs(a.executedPlan)
-      case w: WindowExec => Seq(w.partitionSpec)
-    }.flatten
     Seq("q195_mann_whitney", "q203_rank_corr", "q205_ks_test").foreach { n =>
       val exec = SparkEntry.queries(n)(spark, sf001).queryExecution.executedPlan
-      val specs = windowSpecs(exec)
+      val specs = windows(exec).map(_.partitionSpec)
       assert(specs.nonEmpty, s"$n: expected the stitch window in:\n$exec")
       specs.foreach(spec => assert(spec.nonEmpty,
         s"$n: unpartitioned window — single-task prefix at any scale:\n$exec"))

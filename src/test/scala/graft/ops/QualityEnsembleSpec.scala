@@ -53,16 +53,9 @@ class QualityEnsembleSpec extends graft.SparkSpec {
   }
 
   test("ranks come from the stitch — no global window, no single partition") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    def windowSpecs(p: SparkPlan): Seq[Seq[Any]] = p.collect {
-      case a: AdaptiveSparkPlanExec => windowSpecs(a.executedPlan)
-      case w: WindowExec => Seq(w.partitionSpec)
-    }.flatten
     val exec = graft.SparkEntry.queries("q344_quality_ensemble")(spark, sf001)
       .queryExecution.executedPlan
-    val specs = windowSpecs(exec)
+    val specs = windows(exec).map(_.partitionSpec)
     assert(specs.nonEmpty, s"expected the stitch windows in:\n$exec")
     specs.foreach { spec =>
       assert(spec.nonEmpty, s"GLOBAL window (empty partition spec):\n$exec")
