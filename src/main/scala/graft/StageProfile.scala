@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** Local diagnosis main: run ONE query from SparkEntry.queries and print
   * per-stage task counts / runtime / cpu / shuffle / spill, to localize
   * where task-seconds go when `Bench` shows task_s >> cpu_s (VERDICT r7:
-  * q100 at 5.6×). Usage: runMain graft.StageProfile <queryName> [sfDir]. */
+  * q100 at 5.6×). Usage: runMain graft.StageProfile <queryName> [sfDir]
+  * [repeats]; each repeat prints its wall, process cpu and the number of
+  * generated classes compiled. */
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -77,15 +79,19 @@ object StageProfile {
       })
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    // generated classes Janino compiled (driver and local tasks alike):
+    // a rerun that still compiles is paying codegen, not data work
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     (1 to repeats).foreach { r =>
       graft.ops.CacheRegistry.clear(spark)
-      val (t0, c0) = (System.nanoTime(), os.getProcessCpuTime)
+      val (t0, c0, k0) = (System.nanoTime(), os.getProcessCpuTime, compiles.getCount)
       // a noop write of every column: the same full materialization the
       // performance gate times (count() lets Catalyst prune the outputs)
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = (os.getProcessCpuTime - c0) / 1e9
-      println(f"query=$name run=$r wall=$wall%.2fs cpu=$cpu%.2fs")
+      println(f"query=$name run=$r wall=$wall%.2fs cpu=$cpu%.2fs " +
+        s"compiles=${compiles.getCount - k0}")
     }
     Thread.sleep(1500) // listener bus drain
     val tot = stages.values

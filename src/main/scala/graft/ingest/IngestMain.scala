@@ -29,12 +29,14 @@ object IngestMain {
     // invocation should get the usage message, not an index error).
     require(args.length >= 3, "usage: IngestMain <config.json> kafka <brokers> | file <stageDir>")
     val cfg = EngineConfig.fromFile(args(0))
-    val spark = SparkSession.builder()
+    // SessionDefaults.tune: the shipped service runs the codegen bound and
+    // AQE policy the ingest benchmark measures
+    val spark = graft.SessionDefaults.tune(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
       .appName("graft-ingest")
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.extensions", "graft.GraftExtensions"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -52,10 +52,6 @@ object Pipeline {
       GraftFunctions.snappy_decode(col("value")).cast("string").as("json"))
   }
 
-  /** S6+S13 for one topic: parse against its schema, sorted projection with
-    * Catalyst casts. Rows whose JSON fails to parse come back with every
-    * projected column null — callers dead-letter them (reference kept the
-    * CSV dump on failed insert; we keep the raw payload). */
   /** Malformed JSON detection: PERMISSIVE `from_json` yields an all-null
     * struct (not a null struct) for bad input, so a `_corrupt_record` field
     * is the reliable reject signal — a legitimate `{}` message stays a row
@@ -83,6 +79,10 @@ object Pipeline {
     (good, bad)
   }
 
+  /** S6+S13 for one topic: parse against its schema, sorted projection with
+    * Catalyst casts. Rows whose JSON fails to parse are dropped here;
+    * [[splitGoodBad]] returns them for dead-lettering (reference kept the
+    * CSV dump on failed insert; we keep the raw payload). */
   def projectTopic(df: DataFrame, tc: TopicConfig): DataFrame = {
     val schema = ClickHouseSchema.fromDescribe(tc.describeTsv)
     val parsed = parseWithCorrupt(df, tc)

@@ -31,10 +31,16 @@ import org.apache.spark.sql.graftaccess.PinnedRdds
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` on
   *    long-lived cluster deployments.)
   *
-  * The conf is read from the OWNING session of the pinned frame — loops
-  * that run in an isolated child session (clusterPairs, localForest)
-  * copy the caller's value into the child at creation, alongside their
-  * shuffle-parallelism override.
+  * The conf is read from the OWNING session of the pinned frame. Loops
+  * that run in a child session (clusterPairs, clusterPairsStar) name the
+  * caller's value in the child's conf set, alongside their
+  * shuffle-parallelism override, and get the child from [[Loops.child]]:
+  * one reused child per (parent session, conf set), whose conf is set
+  * once at creation and never changed after. Reuse is what keeps a
+  * loop's generated code compiled: Spark's codegen cache is keyed on the
+  * executing classloader as well as the source, and every new session
+  * brings its own, so a fresh child per call recompiled every loop
+  * stage on every run.
   *
   * `eager = false` keeps the lazy-materialization contract both modes
   * share: the first action checkpoints AND returns its result in one job.
@@ -149,6 +155,28 @@ object Loops {
     }
     anchors.remove(sc)
   }
+
+  // parent session → conf set → child; weak on the parent, so a stopped or
+  // dropped session takes its children with it
+  private val children =
+    new java.util.WeakHashMap[SparkSession, Map[Map[String, String], SparkSession]]()
+
+  /** The child session of `parent` that carries `confs`: created (with
+    * `confs` set on it) on the first call for that conf set, the same
+    * instance for every later one. A child starts from the SparkContext's
+    * confs, not the parent's runtime ones, so `confs` must name every
+    * runtime conf the child needs. Callers never change a child's conf:
+    * the child is shared by every call that names the same set. */
+  def child(parent: SparkSession, confs: Map[String, String]): SparkSession =
+    children.synchronized {
+      val bySet = Option(children.get(parent)).getOrElse(Map.empty)
+      bySet.getOrElse(confs, {
+        val c = parent.newSession()
+        confs.foreach { case (k, v) => c.conf.set(k, v) }
+        children.put(parent, bySet.updated(confs, c))
+        c
+      })
+    }
 
   /** Live tracked pin count for a context (test/diagnostic hook). */
   def livePins(sc: SparkContext): Int =

@@ -727,11 +727,12 @@ object Relational {
     // join keys and pushes a might_contain probe beneath the fact side's
     // shuffle, so non-matching fact rows die at the scan instead of
     // paying exchange + join. This query plans exactly that shape: a
-    // conf-isolated child session (the clusterPairs rule — never mutate
-    // the caller's SQLConf) disables broadcast to simulate the oversized
-    // dim and drops the application-side size floor so the rule fires at
-    // test scale; RelationalSpec asserts the bloom actually injects into
-    // the optimized plan AND that on/off results are identical. Results
+    // child session (the clusterPairs rule — never mutate the caller's
+    // SQLConf; Loops.child reuses it across runs) disables broadcast to
+    // simulate the oversized dim and drops the application-side size
+    // floor so the rule fires at test scale; RelationalSpec asserts the
+    // bloom actually injects into the optimized plan AND that on/off
+    // results are identical. Results
     // are exact either way — the bloom only prunes, the join verifies —
     // so the oracle is the plain join.
     Q("q198_runtime_filter_join",
@@ -744,11 +745,10 @@ object Relational {
         |WHERE o_orderpriority = '1-URGENT'
         |GROUP BY 1, 2
         |ORDER BY mon""".stripMargin) { (s, dir) =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+      val s2 = Loops.child(s, Map(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0"))
       val o = t(s2, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftaccess.SessionFrames
 import graft.Q
 import graft.ops.Loops._
 import graft.schema.Tables.{t, tSpread}
@@ -418,22 +419,16 @@ object TextDedup {
     // in task scheduling than the data costs to process. ~2M edge rows per
     // partition keeps a 100 TB-derived pair set at full parallelism while
     // a few-thousand-pair corpus runs the whole loop in one task per stage.
-    // The low parallelism lives in an ISOLATED child session (own SQLConf,
-    // shared SparkContext): mutating the caller's shuffle.partitions would
-    // race any concurrent query planned on that session and, under
-    // concurrent clusterPairs calls, restore the wrong value permanently.
-    val loop = s.newSession()
-    // one-time symmetric closure + self-loops still build under the
-    // caller's parallelism (edges0's lineage was planned on `s`)
-    val edges = loop.createDataFrame(edges0.rdd, edges0.schema).persist()
-    val defaultParts = s.conf.get("spark.sql.shuffle.partitions")
-    val nEdges = edges.count() // also materializes the persist
-    val loopParts =
-      math.max(1L, math.min(defaultParts.toLong, nEdges / 2000000L + 1L))
-    loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // newSession starts from SparkContext defaults, not the caller's
-    // runtime confs — carry the caller's checkpoint posture into the loop
-    s.conf.getOption(Loops.PinKey).foreach(loop.conf.set(Loops.PinKey, _))
+    // The low parallelism lives in a child session (own SQLConf, shared
+    // SparkContext): mutating the caller's shuffle.partitions would race
+    // any concurrent query planned on that session and, under concurrent
+    // clusterPairs calls, restore the wrong value permanently.
+    // The one-time symmetric closure + self-loops build under the caller's
+    // parallelism; its count sizes the loop before the child is picked.
+    val edgesIn = s.createDataFrame(edges0.rdd, edges0.schema).persist()
+    val nEdges = edgesIn.count() // also materializes the persist
+    val loop = loopSession(s, nEdges)
+    val edges = SessionFrames.on(loop, edgesIn) // reads the caller's persist
     // Seed with one neighborhood-min pre-pass instead of identity labels:
     // the self-loop edges make min-over-neighbors = min(self, neighbors),
     // so threshold-clique families (every member adjacent to the keeper —
@@ -492,7 +487,7 @@ object TextDedup {
         prevSum = sumNow
         round += 1
       }
-    } finally edges.unpersist(blocking = false) // labels is checkpointed — lineage-free
+    } finally edgesIn.unpersist(blocking = false) // labels is checkpointed — lineage-free
     if (!converged)
       graft.ingest.GraftLog.warn("clusterPairs round bound reached before convergence",
         s"rounds=$round — results may be partially propagated")
@@ -500,6 +495,17 @@ object TextDedup {
     // so the post-loop aggregation runs at its parallelism, not the loop's
     val labelsOut = s.createDataFrame(labels.rdd, labels.schema)
     assembleClusters(labelsOut.withColumnRenamed("lbl", "cluster_id"))
+  }
+
+  /** The CC loops' child session (see [[Loops.child]]): shuffle
+    * parallelism sized to the edge count, ~2M edge rows per partition and
+    * at most the caller's `spark.sql.shuffle.partitions`, plus the
+    * caller's checkpoint posture, which a child does not inherit. */
+  private def loopSession(s: SparkSession, nEdges: Long): SparkSession = {
+    val defaultParts = s.conf.get("spark.sql.shuffle.partitions").toLong
+    val loopParts = math.max(1L, math.min(defaultParts, nEdges / 2000000L + 1L))
+    Loops.child(s, Map("spark.sql.shuffle.partitions" -> loopParts.toString) ++
+      s.conf.getOption(Loops.PinKey).map(Loops.PinKey -> _))
   }
 
   /** (doc, cluster_id) labels → the q72 output shape: cluster size join +
@@ -536,7 +542,7 @@ object TextDedup {
     * graft.ScaleBench measures both on the planted corpus (SCALE.md) and
     * the conf gate `graft.textdedup.ccAlgo=star` lets a deployment pick.
     *
-    * Same iterative-loop hygiene as [[clusterPairs]]: isolated
+    * Same iterative-loop hygiene as [[clusterPairs]]: reused
     * low-parallelism child session, lazy localCheckpoint truncating
     * lineage each round, ONE action per round (count + order-insensitive
     * xxhash64 sum as the fixpoint signal — the star steps are not
@@ -551,16 +557,11 @@ object TextDedup {
     // contracts, its root keeps edges only on the v side — and a node can
     // drop off BOTH sides transiently, so labels must be rebuilt against
     // the original endpoint set, not the final edge list alone
-    val loop = s.newSession()
-    val edges0 = loop.createDataFrame(init.rdd, init.schema).persist()
-    val defaultParts = s.conf.get("spark.sql.shuffle.partitions")
-    val nEdges = edges0.count()
-    val loopParts =
-      math.max(1L, math.min(defaultParts.toLong, nEdges / 2000000L + 1L))
-    loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // newSession starts from SparkContext defaults, not the caller's
-    // runtime confs — carry the caller's checkpoint posture into the loop
-    s.conf.getOption(Loops.PinKey).foreach(loop.conf.set(Loops.PinKey, _))
+    val initIn = s.createDataFrame(init.rdd, init.schema).persist()
+    val nEdges = initIn.count()
+    val loop = loopSession(s, nEdges)
+    val loopParts = loop.conf.get("spark.sql.shuffle.partitions").toInt
+    val edges0 = SessionFrames.on(loop, initIn)
     // LOCAL-CONTRACTION PRE-PASS: per-partition union-find replaces each
     // partition's subgraph with a star forest (node → partition-local
     // root) in ONE narrow pass, no shuffle. Connectivity is exactly
@@ -590,7 +591,7 @@ object TextDedup {
       if (nEdges > 0 &&
         init.schema.fields.forall(_.dataType ==
           org.apache.spark.sql.types.LongType))
-        localForest(edges0.coalesce(loopParts.toInt)).pin(ps, eager = false)
+        localForest(edges0.coalesce(loopParts)).pin(ps, eager = false)
       else edges0
     // decimal(38,0) sum: a long sum of 2^63-scale hashes overflows (an
     // ERROR under ANSI mode, silent wraparound otherwise); 1e12 edges ×
@@ -649,7 +650,7 @@ object TextDedup {
           sinceProbe = 0
         }
       }
-    } finally edges0.unpersist(blocking = false)
+    } finally initIn.unpersist(blocking = false)
     if (!converged)
       graft.ingest.GraftLog.warn("clusterPairsStar round bound reached before convergence",
         s"rounds=$round — results may be partially contracted")

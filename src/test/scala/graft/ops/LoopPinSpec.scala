@@ -128,4 +128,18 @@ class LoopPinSpec extends SparkSpec {
       assert(e.getMessage.contains(Loops.PinKey))
     } finally s.conf.unset(Loops.PinKey)
   }
+
+  test("Loops.child returns one child per conf set and sets its confs once") {
+    val parentParts = spark.conf.get("spark.sql.shuffle.partitions")
+    val a = Map("spark.sql.shuffle.partitions" -> "1")
+    val c1 = Loops.child(spark, a)
+    assert(c1 ne spark)
+    assert(Loops.child(spark, a) eq c1)
+    assert(c1.conf.get("spark.sql.shuffle.partitions") == "1")
+    val c2 = Loops.child(spark, Map("spark.sql.shuffle.partitions" -> "2"))
+    assert(c2 ne c1)
+    assert(c2.conf.get("spark.sql.shuffle.partitions") == "2")
+    // the parent's own conf is untouched
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == parentParts)
+  }
 }
